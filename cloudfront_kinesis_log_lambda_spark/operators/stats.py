@@ -157,15 +157,19 @@ def corr_matrix(df: DataFrame, cols: list[str]) -> DataFrame:
     ]
     # r = cov/(σa·σb) from the built-in co-moment aggregates; NOT
     # F.corr, whose internal divide throws under Spark 4 ANSI when a
-    # column is constant — try_divide yields NULL there, matching
-    # SQL corr semantics on both engines
+    # column is constant. A constant column is detected EXACTLY
+    # (min = max → NULL, SQL corr semantics): merging partial
+    # aggregates can leave its variance at ~1e-32 instead of 0, and a
+    # divide would then return a finite, meaningless r. try_divide
+    # still covers the empty input.
     agg = df.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         *[
             F.round(
                 F.expr(
-                    f"try_divide(covar_samp({a}, {b}), "
-                    f"stddev_samp({a}) * stddev_samp({b}))"
+                    f"CASE WHEN min({a}) = max({a}) OR min({b}) = max({b}) "
+                    f"THEN NULL ELSE try_divide(covar_samp({a}, {b}), "
+                    f"stddev_samp({a}) * stddev_samp({b})) END"
                 ),
                 STATS_ROUND,
             ).alias(f"{a}__{b}")

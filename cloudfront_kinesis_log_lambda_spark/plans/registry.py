@@ -280,8 +280,7 @@ def events_hll_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build(root: str) -> DataFrame:
         sk = StreamingHLL(root, ["event_type"], "user_id")
         e = R.load(spark, sf_dir, "events")
-        for wave in range(3):
-            sk(e.filter(F.pmod(F.col("event_id"), F.lit(3)) == wave), wave)
+        _drive_residue_waves(sk, e, "event_id")
         return sk.estimate(spark)
 
     return _with_scratch("stream-hll", build)
@@ -301,8 +300,7 @@ def events_ddsketch_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build(root: str) -> DataFrame:
         dd = StreamingDDSketch(root, ["event_type"])
         e = R.load(spark, sf_dir, "events")
-        for wave in range(3):
-            dd(e.filter(F.pmod(F.col("event_id"), F.lit(3)) == wave), wave)
+        _drive_residue_waves(dd, e, "event_id")
         return dd.quantiles(spark)
 
     return _with_scratch("stream-dd", build)
@@ -326,8 +324,7 @@ def word_countmin_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build(root: str) -> DataFrame:
         cms = StreamingCountMin(root)
         d = R.load(spark, sf_dir, "documents").select("doc_id", "text")
-        for wave in range(3):
-            cms(d.filter(F.pmod(F.col("doc_id"), F.lit(3)) == wave), wave)
+        _drive_residue_waves(cms, d, "doc_id")
         top = (
             d.select(F.explode(F.split("text", r"\s+")).alias("word"))
             .filter(F.col("word") != "")
@@ -361,8 +358,7 @@ def doc_weighted_sample_incremental(
     def build(root: str) -> DataFrame:
         ws = StreamingWeightedSample(root, k=WEIGHTED_SAMPLE_K)
         d = R.load(spark, sf_dir, "documents").select("doc_id", "n_chars")
-        for wave in range(3):
-            ws(d.filter(F.pmod(F.col("doc_id"), F.lit(3)) == wave), wave)
+        _drive_residue_waves(ws, d, "doc_id")
         return ws.sample(spark)
 
     return _with_scratch("stream-ws", build)
@@ -972,6 +968,7 @@ def kinesis_exactly_once_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cloudfront_kinesis_log_lambda_spark.streaming.pipeline import (
         dedup_within_watermark,
     )
+    from cloudfront_kinesis_log_lambda_spark.streaming.store import write_batch
 
     root = os.path.join(tempfile.gettempdir(), f"cfkll-eo-rollup-{os.getpid()}")
     shutil.rmtree(root, ignore_errors=True)
@@ -1107,13 +1104,10 @@ def kinesis_exactly_once_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     decoded = decoded.filter(F.col("ts") >= F.to_timestamp(F.lit(cutoff)))
     deduped = dedup_within_watermark(decoded, ["event_id"], watermark="3650 days")
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(store, f"batch={batch_id}")
-        )
-
     q = (
-        deduped.writeStream.foreachBatch(write_batch)
+        deduped.writeStream.foreachBatch(
+            lambda batch_df, batch_id: write_batch(batch_df, store, batch_id)
+        )
         .option("checkpointLocation", os.path.join(root, "ckpt"))
         .start()
     )
@@ -1253,6 +1247,15 @@ def matryoshka_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _drive_residue_waves(twin, df: DataFrame, key: str) -> None:
+    """Shared wave driver for the commutative-merge incremental twins:
+    ``df`` as three arrival waves split by ``key`` residue mod 3 —
+    deliberately NOT time-ordered (every merge law here commutes), so
+    groups that span waves must accumulate in the store, not recount."""
+    for wave in range(3):
+        twin(df.filter(F.pmod(F.col(key), F.lit(3)) == wave), wave)
+
+
 def _drive_time_ordered_waves(st, e) -> None:
     """Shared wave driver for the order-DEPENDENT incremental twins
     (transitions / EWMA / Holt): the events table as three
@@ -1325,8 +1328,7 @@ def events_ohlc_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build(root: str) -> DataFrame:
         so = StreamingOHLC(root)
         e = R.load(spark, sf_dir, "events")
-        for wave in range(3):
-            so(e.filter(F.pmod(F.col("event_id"), F.lit(3)) == wave), wave)
+        _drive_residue_waves(so, e, "event_id")
         return so.candles(spark)
 
     return _with_scratch("stream-ohlc", build)
@@ -1408,8 +1410,7 @@ def events_linear_trend_incremental(
     def build(root: str) -> DataFrame:
         st = StreamingLinearTrend(root)
         e = R.load(spark, sf_dir, "events")
-        for wave in range(3):
-            st(e.filter(F.pmod(F.col("event_id"), F.lit(3)) == wave), wave)
+        _drive_residue_waves(st, e, "event_id")
         return st.trend(spark)
 
     return _with_scratch("stream-lintrend", build)
@@ -1436,8 +1437,7 @@ def events_psi_drift_incremental(
             "event_id", "event_type", "ts", "value"
         )
         mon.freeze_reference(e.filter(F.col("ts") < F.lit(PSI_SPLIT)))
-        for wave in range(3):
-            mon(e.filter(F.pmod(F.col("event_id"), F.lit(3)) == wave), wave)
+        _drive_residue_waves(mon, e, "event_id")
         return mon.psi(spark)
 
     return _with_scratch("stream-psi", build)
@@ -1457,8 +1457,7 @@ def events_chi2_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         e = R.load(spark, sf_dir, "events").select(
             "event_id", "event_type", F.hour("ts").alias("hour_of_day")
         )
-        for wave in range(3):
-            t(e.filter(F.pmod(F.col("event_id"), F.lit(3)) == wave), wave)
+        _drive_residue_waves(t, e, "event_id")
         return t.chi2(spark)
 
     return _with_scratch("stream-chi2", build)
@@ -1483,8 +1482,7 @@ def embedding_drift_incremental(
             "embedding",
             (F.col("vec_id") % 2 == 0).alias("is_ref"),
         )
-        for wave in range(3):
-            mon(emb.filter(F.pmod(F.col("vec_id"), F.lit(3)) == wave), wave)
+        _drive_residue_waves(mon, emb, "vec_id")
         return mon.drift(spark)
 
     return _with_scratch("stream-embdrift", build)
@@ -1506,8 +1504,7 @@ def events_ks_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         e = R.load(spark, sf_dir, "events").select(
             "event_id", "event_type", "ts", "value"
         )
-        for wave in range(3):
-            ks(e.filter(F.pmod(F.col("event_id"), F.lit(3)) == wave), wave)
+        _drive_residue_waves(ks, e, "event_id")
         return ks.ks(spark)
 
     return _with_scratch("stream-ks", build)
@@ -1537,8 +1534,7 @@ def order_basket_rules_incremental(
             "l_linenumber",
         )
         # split by LINE number, not order: most baskets straddle waves
-        for wave in range(3):
-            sr(items.filter(F.pmod(F.col("l_linenumber"), F.lit(3)) == wave), wave)
+        _drive_residue_waves(sr, items, "l_linenumber")
         return sr.rules(spark)
 
     return _with_scratch("stream-rules", build)
@@ -1560,8 +1556,7 @@ def orders_quality_incremental(
         customer = R.load(spark, sf_dir, "customer")
         qc = StreamingQualityChecks(root, customer)
         o = R.load(spark, sf_dir, "orders")
-        for wave in range(3):
-            qc(o.filter(F.pmod(F.col("o_orderkey"), F.lit(3)) == wave), wave)
+        _drive_residue_waves(qc, o, "o_orderkey")
         return qc.checks(spark)
 
     return _with_scratch("stream-quality", build)
@@ -1581,8 +1576,7 @@ def orders_benford_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         o = R.load(spark, sf_dir, "orders").select(
             "o_orderkey", "o_totalprice"
         )
-        for wave in range(3):
-            b(o.filter(F.pmod(F.col("o_orderkey"), F.lit(3)) == wave), wave)
+        _drive_residue_waves(b, o, "o_orderkey")
         return b.digits(spark)
 
     return _with_scratch("stream-benford", build)
@@ -1599,8 +1593,7 @@ def _drive_inverted_index(spark: SparkSession, sf_dir: str, root: str):
 
     st = StreamingInvertedIndex(root)
     d = _docs(spark, sf_dir)
-    for wave in range(3):
-        st(d.filter(F.pmod(F.col("doc_id"), F.lit(3)) == wave), wave)
+    _drive_residue_waves(st, d, "doc_id")
     return st
 
 

@@ -56,7 +56,10 @@ from cloudfront_kinesis_log_lambda_spark.operators.corpus import (
     block_rows,
     reassemble_blocks,
 )
-from cloudfront_kinesis_log_lambda_spark.streaming.store import read_batch_store
+from cloudfront_kinesis_log_lambda_spark.streaming.store import (
+    read_batch_store,
+    write_batch,
+)
 
 _OUT_SCHEMA = "doc_id long, n_blocks long, n_kept long, dedup_text string"
 
@@ -125,12 +128,8 @@ class StreamingBlockDedup:
         )
 
         out = reassemble_blocks(base, kept_rows, self.block_tokens)
-        out.write.mode("overwrite").parquet(
-            os.path.join(self.out_dir, f"batch={batch_id}")
-        )
-        new_first.select("bk").write.mode("overwrite").parquet(
-            os.path.join(self.index_dir, f"batch={batch_id}")
-        )
+        write_batch(out, self.out_dir, batch_id)
+        write_batch(new_first.select("bk"), self.index_dir, batch_id)
 
 
 def block_dedup_log(spark: SparkSession, out_dir: str) -> DataFrame:

@@ -40,7 +40,8 @@ from cloudfront_kinesis_log_lambda_spark.operators.sketch import (
     cms_cells_expr,
 )
 from cloudfront_kinesis_log_lambda_spark.streaming.store import (
-    read_batch_store,
+    read_sum_merged,
+    write_batch,
 )
 
 _SCHEMA = "r int, col bigint, cell_n bigint"
@@ -71,19 +72,15 @@ class StreamingCountMin:
             .groupBy(F.col("c.r").alias("r"), F.col("c.col").alias("col"))
             .agg(F.sum("n").cast("long").alias("cell_n"))
         )
-        partial.write.mode("overwrite").parquet(
-            os.path.join(self.counters_dir, f"batch={batch_id}")
-        )
+        write_batch(partial, self.counters_dir, batch_id)
 
     def counters(
         self, spark: SparkSession, exclude_batch: int = -1
     ) -> DataFrame:
         """SUM-merged counter matrix over the whole batch history."""
-        raw = read_batch_store(
-            spark, self.counters_dir, _SCHEMA, exclude_batch
-        )
-        return raw.groupBy("r", "col").agg(
-            F.sum("cell_n").cast("long").alias("cell_n")
+        return read_sum_merged(
+            spark, self.counters_dir, _SCHEMA, ("r", "col"), ("cell_n",),
+            exclude_batch,
         )
 
     def probe(

@@ -38,7 +38,8 @@ from cloudfront_kinesis_log_lambda_spark.operators.sketch import (
 )
 from cloudfront_kinesis_log_lambda_spark.operators.util import finite
 from cloudfront_kinesis_log_lambda_spark.streaming.store import (
-    read_batch_store,
+    read_sum_merged,
+    write_batch,
 )
 
 
@@ -77,17 +78,15 @@ class StreamingDDSketch:
             .groupBy(*self.group_cols, "bucket")
             .agg(F.count(F.lit(1)).cast("long").alias("n"))
         )
-        partial.write.mode("overwrite").parquet(
-            os.path.join(self.hist_dir, f"batch={batch_id}")
-        )
+        write_batch(partial, self.hist_dir, batch_id)
 
     def histogram(
         self, spark: SparkSession, exclude_batch: int = -1
     ) -> DataFrame:
         """SUM-merged (group…, bucket, n) over the batch history."""
-        raw = read_batch_store(spark, self.hist_dir, self._schema, exclude_batch)
-        return raw.groupBy(*self.group_cols, "bucket").agg(
-            F.sum("n").cast("long").alias("n")
+        return read_sum_merged(
+            spark, self.hist_dir, self._schema, (*self.group_cols, "bucket"),
+            ("n",), exclude_batch,
         )
 
     def quantiles(

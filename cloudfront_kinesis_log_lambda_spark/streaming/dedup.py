@@ -57,7 +57,10 @@ from cloudfront_kinesis_log_lambda_spark.operators.dedup import (
     minhash_band_rows,
     ordered_pairs,
 )
-from cloudfront_kinesis_log_lambda_spark.streaming.store import read_batch_store
+from cloudfront_kinesis_log_lambda_spark.streaming.store import (
+    read_batch_store,
+    write_batch,
+)
 
 _BANDS_SCHEMA = "doc_id long, band int, h long"
 _GRAMS_SCHEMA = "doc_id long, grams array<string>"
@@ -188,15 +191,9 @@ class StreamingNearDup:
 
         # batch=<id> overwrite everywhere → a retried micro-batch
         # rewrites, never duplicates
-        verified.write.mode("overwrite").parquet(
-            os.path.join(self.out_dir, f"batch={batch_id}")
-        )
-        new_bands.write.mode("overwrite").parquet(
-            os.path.join(self.bands_dir, f"batch={batch_id}")
-        )
-        new_grams.write.mode("overwrite").parquet(
-            os.path.join(self.grams_dir, f"batch={batch_id}")
-        )
+        write_batch(verified, self.out_dir, batch_id)
+        write_batch(new_bands, self.bands_dir, batch_id)
+        write_batch(new_grams, self.grams_dir, batch_id)
 
 
 def near_dup_pair_log(spark: SparkSession, out_dir: str) -> DataFrame:

@@ -43,6 +43,8 @@ from cloudfront_kinesis_log_lambda_spark.operators.quality import (
 )
 from cloudfront_kinesis_log_lambda_spark.streaming.store import (
     read_batch_store,
+    read_sum_merged,
+    write_batch,
 )
 
 _SUMS_SCHEMA = (
@@ -109,12 +111,8 @@ class StreamingEmbeddingDrift:
                 ).alias("s_cur"),
             )
         )
-        sums.write.mode("overwrite").parquet(
-            os.path.join(self.sums_dir, f"batch={batch_id}")
-        )
-        counts.write.mode("overwrite").parquet(
-            os.path.join(self.counts_dir, f"batch={batch_id}")
-        )
+        write_batch(sums, self.sums_dir, batch_id)
+        write_batch(counts, self.counts_dir, batch_id)
 
     def drift(self, spark: SparkSession, exclude_batch: int = -1) -> DataFrame:
         sums = (
@@ -125,15 +123,8 @@ class StreamingEmbeddingDrift:
                 F.expr("cast(sum(s_cur) as decimal(28,9))").alias("s_cur"),
             )
         )
-        counts = (
-            read_batch_store(
-                spark, self.counts_dir, _COUNTS_SCHEMA, exclude_batch
-            )
-            .groupBy("label")
-            .agg(
-                F.sum("n_ref").cast("long").alias("n_ref"),
-                F.sum("n_cur").cast("long").alias("n_cur"),
-            )
-            .filter((F.col("n_ref") > 0) & (F.col("n_cur") > 0))
-        )
+        counts = read_sum_merged(
+            spark, self.counts_dir, _COUNTS_SCHEMA, ("label",),
+            ("n_ref", "n_cur"), exclude_batch,
+        ).filter((F.col("n_ref") > 0) & (F.col("n_cur") > 0))
         return centroid_drift_from_sums(sums, counts)

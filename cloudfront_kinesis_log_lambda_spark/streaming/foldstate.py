@@ -1,5 +1,6 @@
 """Shared state-store machinery for the per-user ORDER-DEPENDENT fold
-twins (streaming/ewma.py, streaming/holt.py).
+twins (streaming/ewma.py, streaming/holt.py) and the last-event state
+of streaming/transitions.py.
 
 Both twins persist one CUMULATIVE accumulator row per active user per
 batch and share three retry-safety-critical behaviors that must live
@@ -28,6 +29,7 @@ from pyspark.sql import functions as F
 from cloudfront_kinesis_log_lambda_spark.streaming.store import (
     read_batch_store,
     read_batch_store_before,
+    write_batch,
 )
 
 
@@ -51,9 +53,7 @@ class FoldStateStore:
         self.key = key
 
     def write(self, state_rows: DataFrame, batch_id: int) -> None:
-        state_rows.write.mode("overwrite").parquet(
-            os.path.join(self.state_dir, f"batch={batch_id}")
-        )
+        write_batch(state_rows, self.state_dir, batch_id)
 
     def state(
         self, spark: SparkSession, before_batch: int | None = None

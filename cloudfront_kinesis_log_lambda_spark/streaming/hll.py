@@ -47,6 +47,7 @@ from cloudfront_kinesis_log_lambda_spark.operators.sketch import (
 )
 from cloudfront_kinesis_log_lambda_spark.streaming.store import (
     read_batch_store,
+    write_batch,
 )
 
 
@@ -79,9 +80,7 @@ class StreamingHLL:
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         regs = hll_registers(batch_df, self.group_cols, self.key_col)
-        regs.write.mode("overwrite").parquet(
-            os.path.join(self.registers_dir, f"batch={batch_id}")
-        )
+        write_batch(regs, self.registers_dir, batch_id)
 
     def registers(
         self, spark: SparkSession, exclude_batch: int = -1

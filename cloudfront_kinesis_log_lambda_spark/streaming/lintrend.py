@@ -30,6 +30,7 @@ from cloudfront_kinesis_log_lambda_spark.operators.timeseries import (
 )
 from cloudfront_kinesis_log_lambda_spark.streaming.store import (
     read_batch_store,
+    write_batch,
 )
 
 _SCHEMA = (
@@ -55,9 +56,7 @@ class StreamingLinearTrend:
         parts = linear_trend_partials(
             batch_df.select("event_type", "ts", "value")
         )
-        parts.write.mode("overwrite").parquet(
-            os.path.join(self.partials_dir, f"batch={batch_id}")
-        )
+        write_batch(parts, self.partials_dir, batch_id)
 
     def merged(self, spark: SparkSession) -> DataFrame:
         """SUM-merged moment sums over the whole batch history —

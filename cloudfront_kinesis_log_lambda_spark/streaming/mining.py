@@ -43,6 +43,7 @@ from cloudfront_kinesis_log_lambda_spark.operators.mining import (
 )
 from cloudfront_kinesis_log_lambda_spark.streaming.store import (
     read_batch_store,
+    write_batch,
 )
 
 _EDGES_SCHEMA = "basket bigint, item string"
@@ -67,9 +68,7 @@ class StreamingBasketRules:
             F.col(self.basket_col).cast("long").alias("basket"),
             F.col(self.item_col).alias("item"),
         ).distinct()
-        edges.write.mode("overwrite").parquet(
-            os.path.join(self.edges_dir, f"batch={batch_id}")
-        )
+        write_batch(edges, self.edges_dir, batch_id)
 
     def edges(
         self, spark: SparkSession, exclude_batch: int = -1

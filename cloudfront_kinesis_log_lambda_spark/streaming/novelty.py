@@ -48,7 +48,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cloudfront_kinesis_log_lambda_spark.operators.dedup import shingles
-from cloudfront_kinesis_log_lambda_spark.streaming.store import read_batch_store
+from cloudfront_kinesis_log_lambda_spark.streaming.store import (
+    read_batch_store,
+    write_batch,
+)
 
 _INDEX_SCHEMA = "shingle string, first_doc long"
 _OUT_SCHEMA = "doc_id long, n_grams long, n_novel long, novelty double"
@@ -125,13 +128,13 @@ class StreamingNovelty:
             )
         )
 
-        scored.write.mode("overwrite").parquet(
-            os.path.join(self.out_dir, f"batch={batch_id}")
-        )
-        novel_shingles.select(
-            "shingle", F.col("batch_first").alias("first_doc")
-        ).write.mode("overwrite").parquet(
-            os.path.join(self.index_dir, f"batch={batch_id}")
+        write_batch(scored, self.out_dir, batch_id)
+        write_batch(
+            novel_shingles.select(
+                "shingle", F.col("batch_first").alias("first_doc")
+            ),
+            self.index_dir,
+            batch_id,
         )
 
 

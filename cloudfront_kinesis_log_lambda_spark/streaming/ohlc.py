@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from cloudfront_kinesis_log_lambda_spark.operators.timeseries import _event_key
 from cloudfront_kinesis_log_lambda_spark.streaming.store import (
     read_batch_store,
+    write_batch,
 )
 
 _SCHEMA = (
@@ -70,9 +71,7 @@ class StreamingOHLC:
             F.expr("max_by(value, k)").alias("close"),
             F.count(F.lit(1)).cast("long").alias("n"),
         )
-        partial.write.mode("overwrite").parquet(
-            os.path.join(self.candles_dir, f"batch={batch_id}")
-        )
+        write_batch(partial, self.candles_dir, batch_id)
 
     def candles(
         self, spark: SparkSession, exclude_batch: int = -1

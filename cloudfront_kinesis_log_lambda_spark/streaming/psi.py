@@ -37,7 +37,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from cloudfront_kinesis_log_lambda_spark.operators.quality import (
     PSI_SPLIT,
@@ -46,7 +45,8 @@ from cloudfront_kinesis_log_lambda_spark.operators.quality import (
     psi_ref_stats,
 )
 from cloudfront_kinesis_log_lambda_spark.streaming.store import (
-    read_batch_store,
+    read_sum_merged,
+    write_batch,
 )
 
 _COUNTS_SCHEMA = "event_type string, bin long, n_ref bigint, n_cur bigint"
@@ -86,20 +86,15 @@ class StreamingPSI:
         partial = psi_bin_counts(
             batch_df, self._stats(batch_df.sparkSession), self.split
         )
-        partial.write.mode("overwrite").parquet(
-            os.path.join(self.counts_dir, f"batch={batch_id}")
-        )
+        write_batch(partial, self.counts_dir, batch_id)
 
     def counts(
         self, spark: SparkSession, exclude_batch: int = -1
     ) -> DataFrame:
         """SUM-merged (type, bin) counts over the batch history."""
-        raw = read_batch_store(
-            spark, self.counts_dir, _COUNTS_SCHEMA, exclude_batch
-        )
-        return raw.groupBy("event_type", "bin").agg(
-            F.sum("n_ref").cast("long").alias("n_ref"),
-            F.sum("n_cur").cast("long").alias("n_cur"),
+        return read_sum_merged(
+            spark, self.counts_dir, _COUNTS_SCHEMA, ("event_type", "bin"),
+            ("n_ref", "n_cur"), exclude_batch,
         )
 
     def psi(self, spark: SparkSession, exclude_batch: int = -1) -> DataFrame:

@@ -41,7 +41,8 @@ from cloudfront_kinesis_log_lambda_spark.operators.quality import (
     quality_verdicts,
 )
 from cloudfront_kinesis_log_lambda_spark.streaming.store import (
-    read_batch_store,
+    read_sum_merged,
+    write_batch,
 )
 
 _COUNTER_SCHEMA = (
@@ -90,33 +91,27 @@ class StreamingQualityChecks:
             batch_df.o_custkey == self.customer.c_custkey,
             "left_semi",
         ).agg(F.count(F.lit(1)).cast("long").alias("custkey_resolves"))
-        cnt.join(F.broadcast(resolved)).write.mode("overwrite").parquet(
-            os.path.join(self.counters_dir, f"batch={batch_id}")
+        write_batch(
+            cnt.join(F.broadcast(resolved)), self.counters_dir, batch_id
         )
         keys = batch_df.groupBy("o_orderkey").agg(
             F.count(F.lit(1)).cast("long").alias("k_n")
         )
-        keys.write.mode("overwrite").parquet(
-            os.path.join(self.keys_dir, f"batch={batch_id}")
-        )
+        write_batch(keys, self.keys_dir, batch_id)
 
     def checks(
         self, spark: SparkSession, exclude_batch: int = -1
     ) -> DataFrame:
         """The running (check, metric, passed) suite — bit-identical
         to the batch operator over the union of arrived rows."""
-        counters = read_batch_store(
-            spark, self.counters_dir, _COUNTER_SCHEMA, exclude_batch
-        ).agg(
-            F.sum("n").cast("long").alias("n"),
-            *[
-                F.sum(name).cast("long").alias(name)
-                for name in (*_ROW_CHECKS, "custkey_resolves")
-            ],
+        counters = read_sum_merged(
+            spark, self.counters_dir, _COUNTER_SCHEMA, (),
+            ("n", *_ROW_CHECKS, "custkey_resolves"), exclude_batch,
         )
-        keys = read_batch_store(
-            spark, self.keys_dir, _KEYS_SCHEMA, exclude_batch
-        ).groupBy("o_orderkey").agg(F.sum("k_n").cast("long").alias("k_n"))
+        keys = read_sum_merged(
+            spark, self.keys_dir, _KEYS_SCHEMA, ("o_orderkey",), ("k_n",),
+            exclude_batch,
+        )
         uniq = keys.agg(
             F.count(F.lit(1)).cast("long").alias("n_distinct")
         )

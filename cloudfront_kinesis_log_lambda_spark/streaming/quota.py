@@ -41,7 +41,10 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from cloudfront_kinesis_log_lambda_spark.streaming.store import read_batch_store
+from cloudfront_kinesis_log_lambda_spark.streaming.store import (
+    read_batch_store,
+    write_batch,
+)
 
 _COUNTS_SCHEMA = "source string, admitted long"
 _OUT_SCHEMA = "doc_id long, source string, admitted int"
@@ -88,15 +91,13 @@ class StreamingSourceQuota:
             )
             .localCheckpoint(eager=True)  # reused 2×; drops the stream source
         )
-        decided.write.mode("overwrite").parquet(
-            os.path.join(self.out_dir, f"batch={batch_id}")
-        )
-        (
+        write_batch(decided, self.out_dir, batch_id)
+        write_batch(
             decided.filter(F.col("admitted") == 1)
             .groupBy("source")
-            .agg(F.count(F.lit(1)).alias("admitted"))
-            .write.mode("overwrite")
-            .parquet(os.path.join(self.counts_dir, f"batch={batch_id}"))
+            .agg(F.count(F.lit(1)).alias("admitted")),
+            self.counts_dir,
+            batch_id,
         )
 
 
@@ -168,14 +169,13 @@ class StreamingMixture:
             )
             .localCheckpoint(eager=True)
         )
-        decided.write.mode("overwrite").parquet(
-            os.path.join(self.out_dir, f"batch={batch_id}")
-        )
-        (
-            decided.groupBy("source")
-            .agg(F.sum("n_tokens").alias("seen_tokens"))
-            .write.mode("overwrite")
-            .parquet(os.path.join(self.counts_dir, f"batch={batch_id}"))
+        write_batch(decided, self.out_dir, batch_id)
+        write_batch(
+            decided.groupBy("source").agg(
+                F.sum("n_tokens").alias("seen_tokens")
+            ),
+            self.counts_dir,
+            batch_id,
         )
 
 

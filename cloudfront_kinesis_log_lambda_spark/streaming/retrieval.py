@@ -51,7 +51,8 @@ from cloudfront_kinesis_log_lambda_spark.operators.retrieval import (
     index_from_tf,
 )
 from cloudfront_kinesis_log_lambda_spark.streaming.store import (
-    read_batch_store,
+    read_sum_merged,
+    write_batch,
 )
 
 _TF_SCHEMA = "word string, doc_id bigint, tf bigint"
@@ -81,25 +82,21 @@ class StreamingInvertedIndex:
             # feeds two writes; without this the batch re-tokenizes
             .localCheckpoint(eager=True)
         )
-        tf.write.mode("overwrite").parquet(
-            os.path.join(self.postings_dir, f"batch={batch_id}")
-        )
-        tf.groupBy("doc_id").agg(
-            F.sum("tf").cast("long").alias("dl")
-        ).write.mode("overwrite").parquet(
-            os.path.join(self.dl_dir, f"batch={batch_id}")
+        write_batch(tf, self.postings_dir, batch_id)
+        write_batch(
+            tf.groupBy("doc_id").agg(F.sum("tf").cast("long").alias("dl")),
+            self.dl_dir,
+            batch_id,
         )
 
     def _merged_tf(self, spark: SparkSession) -> DataFrame:
-        raw = read_batch_store(spark, self.postings_dir, _TF_SCHEMA, -1)
-        return raw.groupBy("word", "doc_id").agg(
-            F.sum("tf").cast("long").alias("tf")
+        return read_sum_merged(
+            spark, self.postings_dir, _TF_SCHEMA, ("word", "doc_id"), ("tf",)
         )
 
     def _merged_dl(self, spark: SparkSession) -> DataFrame:
-        raw = read_batch_store(spark, self.dl_dir, _DL_SCHEMA, -1)
-        return raw.groupBy("doc_id").agg(
-            F.sum("dl").cast("long").alias("dl")
+        return read_sum_merged(
+            spark, self.dl_dir, _DL_SCHEMA, ("doc_id",), ("dl",)
         )
 
     def index(

@@ -61,6 +61,7 @@ from cloudfront_kinesis_log_lambda_spark.streaming.store import (
     ensure_frozen_centroids,
     load_centroids,
     read_batch_store,
+    write_batch,
 )
 
 _INDEX_SCHEMA = "vec_id long, cid int, embedding array<float>"
@@ -193,12 +194,8 @@ class StreamingSemanticDedup:
             )
 
         # batch=<id> overwrite everywhere → retries rewrite, never dup
-        verified.write.mode("overwrite").parquet(
-            os.path.join(self.out_dir, f"batch={batch_id}")
-        )
-        new_rows.write.mode("overwrite").parquet(
-            os.path.join(self.index_dir, f"batch={batch_id}")
-        )
+        write_batch(verified, self.out_dir, batch_id)
+        write_batch(new_rows, self.index_dir, batch_id)
 
 
 def semantic_pair_log(spark: SparkSession, out_dir: str) -> DataFrame:

@@ -10,12 +10,11 @@ union of arrived rows — the same merge-law family as the Count-Min
 cells and the PSI bin counts, which lets the driver gate hold the
 twins to the SAME DuckDB oracles as the batch entries.
 
-``StreamingCountStore`` is the shared piece: a ``counts/batch=<id>``
-store of keyed count partials with a SUM-merging read. Writers never
-read state, so batch-id overwrite alone makes retries idempotent
-(the retrieval-store argument); re-delivery under a NEW batch id
-would double-count — the standard SUM-store contract
-(streaming/store.py).
+Each twin keeps keyed count partials under ``counts/batch=<id>``
+and reads them back through streaming/store.py's ``read_sum_merged``.
+Writers never read state, so batch-id overwrite alone makes retries
+idempotent (the retrieval-store argument); re-delivery under a NEW
+batch id would double-count — the standard SUM-store contract.
 
 100 TB shape: per-batch state is the contingency's r·c rows (or 9
 digit rows) no matter the batch size; the stream's rows are never
@@ -31,39 +30,9 @@ from pyspark.sql import functions as F
 
 from cloudfront_kinesis_log_lambda_spark.operators.util import finite
 from cloudfront_kinesis_log_lambda_spark.streaming.store import (
-    read_batch_store,
+    read_sum_merged,
+    write_batch,
 )
-
-
-class StreamingCountStore:
-    """Keyed SUM-mergeable count partials under ``counts/batch=<id>``."""
-
-    def __init__(
-        self, store_dir: str, schema: str, key_cols: tuple[str, ...],
-        count_cols: tuple[str, ...],
-    ) -> None:
-        self.counts_dir = os.path.join(store_dir, "counts")
-        self.schema = schema
-        self.key_cols = tuple(key_cols)
-        self.count_cols = tuple(count_cols)
-
-    def write(self, partial: DataFrame, batch_id: int) -> None:
-        partial.write.mode("overwrite").parquet(
-            os.path.join(self.counts_dir, f"batch={batch_id}")
-        )
-
-    def merged(
-        self, spark: SparkSession, exclude_batch: int = -1
-    ) -> DataFrame:
-        raw = read_batch_store(
-            spark, self.counts_dir, self.schema, exclude_batch
-        )
-        return raw.groupBy(*self.key_cols).agg(
-            *[
-                F.sum(c).cast("long").alias(c)
-                for c in self.count_cols
-            ]
-        )
 
 
 class StreamingChi2:
@@ -75,12 +44,7 @@ class StreamingChi2:
     def __init__(
         self, store_dir: str, row_col: str, col_col: str
     ) -> None:
-        self.store = StreamingCountStore(
-            store_dir,
-            "rv string, cv bigint, o bigint",
-            ("rv", "cv"),
-            ("o",),
-        )
+        self.counts_dir = os.path.join(store_dir, "counts")
         self.row_col = row_col
         self.col_col = col_col
 
@@ -97,14 +61,19 @@ class StreamingChi2:
             .groupBy("rv", "cv")
             .agg(F.count(F.lit(1)).cast("long").alias("o"))
         )
-        self.store.write(partial, batch_id)
+        write_batch(partial, self.counts_dir, batch_id)
 
     def chi2(self, spark: SparkSession, exclude_batch: int = -1) -> DataFrame:
         from cloudfront_kinesis_log_lambda_spark.operators.stats import (
             chi2_from_counts,
         )
 
-        return chi2_from_counts(self.store.merged(spark, exclude_batch))
+        return chi2_from_counts(
+            read_sum_merged(
+                spark, self.counts_dir, "rv string, cv bigint, o bigint",
+                ("rv", "cv"), ("o",), exclude_batch,
+            )
+        )
 
 
 class StreamingBenford:
@@ -113,9 +82,7 @@ class StreamingBenford:
     merged counts — bit-identical to the batch operator."""
 
     def __init__(self, store_dir: str, value_col: str) -> None:
-        self.store = StreamingCountStore(
-            store_dir, "digit bigint, n_obs bigint", ("digit",), ("n_obs",)
-        )
+        self.counts_dir = os.path.join(store_dir, "counts")
         self.value_col = value_col
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
@@ -133,7 +100,7 @@ class StreamingBenford:
             .groupBy("digit")
             .agg(F.count(F.lit(1)).cast("long").alias("n_obs"))
         )
-        self.store.write(partial, batch_id)
+        write_batch(partial, self.counts_dir, batch_id)
 
     def digits(
         self, spark: SparkSession, exclude_batch: int = -1
@@ -143,7 +110,11 @@ class StreamingBenford:
         )
 
         return benford_from_counts(
-            spark, self.store.merged(spark, exclude_batch)
+            spark,
+            read_sum_merged(
+                spark, self.counts_dir, "digit bigint, n_obs bigint",
+                ("digit",), ("n_obs",), exclude_batch,
+            ),
         )
 
 
@@ -163,12 +134,7 @@ class StreamingKS:
         value_col: str = "value",
         quantize: int | None = 3,
     ) -> None:
-        self.store = StreamingCountStore(
-            store_dir,
-            "event_type string, v double, c_ref bigint, c_cur bigint",
-            ("event_type", "v"),
-            ("c_ref", "c_cur"),
-        )
+        self.counts_dir = os.path.join(store_dir, "counts")
         self.split = split
         self.type_col = type_col
         self.ts_col = ts_col
@@ -196,11 +162,20 @@ class StreamingKS:
                 .alias("c_cur"),
             )
         )
-        self.store.write(partial, batch_id)
+        write_batch(partial, self.counts_dir, batch_id)
 
     def ks(self, spark: SparkSession, exclude_batch: int = -1) -> DataFrame:
         from cloudfront_kinesis_log_lambda_spark.operators.quality import (
             ks_from_grid,
         )
 
-        return ks_from_grid(self.store.merged(spark, exclude_batch))
+        return ks_from_grid(
+            read_sum_merged(
+                spark,
+                self.counts_dir,
+                "event_type string, v double, c_ref bigint, c_cur bigint",
+                ("event_type", "v"),
+                ("c_ref", "c_cur"),
+                exclude_batch,
+            )
+        )

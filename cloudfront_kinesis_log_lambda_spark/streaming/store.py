@@ -1,14 +1,24 @@
-"""Shared reader + maintenance for ``batch=<id>``-partitioned
-incremental-index stores (the exactly-once-without-a-transaction-log
-pattern used by the streaming near-dup detector, novelty scorer, and
-admission gates).
+"""The ``batch=<id>`` store layout shared by every foreachBatch twin
+(the exactly-once-without-a-transaction-log pattern): writer, readers
+and maintenance.
 
-Every foreachBatch writer lands its state under a ``batch=<id>``
-directory with mode=overwrite, so a retried micro-batch rewrites its
-own paths byte-for-byte. The read side of that contract lives here —
-in ONE place, because it is retry-safety-critical: excluding the
-current batch id guarantees a retry recomputes against exactly the
-pre-batch index instead of seeing its own half-written partition.
+Both sides of the contract live here — in ONE module, because each is
+retry-safety-critical:
+
+- ``write_batch`` lands a micro-batch's state under a ``batch=<id>``
+  directory with mode=overwrite, so a retried micro-batch rewrites its
+  own paths byte-for-byte instead of appending a duplicate;
+- ``read_batch_store`` excludes the current batch id, so a retry
+  recomputes against exactly the pre-batch index instead of seeing its
+  own half-written partition (``read_batch_store_before`` is the AS-OF
+  variant for state a batch's output depends on);
+- ``read_sum_merged`` is the keyed SUM-merge read of the count stores
+  (Count-Min cells, DDSketch/PSI bins, chi-square/Benford/KS counts,
+  tf/dl partials, transition pairs): per-batch partials combine by
+  addition, so the merged table equals the batch reduce over the union
+  of arrived rows. Writers that read nothing make retries idempotent by
+  the overwrite alone; re-delivery under a NEW batch id would
+  double-count — the standard SUM-store contract.
 
 Folding (the maintenance that stops a long-lived stream accumulating
 one directory per micro-batch) uses a GENERATIONAL POINTER so that
@@ -121,6 +131,22 @@ def _read_pointer(path: str) -> dict:
         return json.load(f)
 
 
+def write_batch(
+    df: DataFrame,
+    path: str,
+    batch_id: int,
+    partition_by: tuple[str, ...] = (),
+) -> None:
+    """Write ``df`` as micro-batch ``batch_id`` of the store at ``path``:
+    ``path/batch=<batch_id>`` with mode=overwrite, the idempotent half
+    of the retry contract. ``partition_by`` nests further partition
+    columns inside the batch directory."""
+    w = df.write.mode("overwrite")
+    if partition_by:
+        w = w.partitionBy(*partition_by)
+    w.parquet(os.path.join(path, f"batch={batch_id}"))
+
+
 def read_batch_store(
     spark: SparkSession, path: str, schema: str, exclude_batch: int
 ) -> DataFrame:
@@ -147,6 +173,24 @@ def read_batch_store_before(
     the NEWEST batch can retry and ``fold_batch_store`` keeps it as a
     delta."""
     return _read_batch_store(spark, path, schema, before_batch, before=True)
+
+
+def read_sum_merged(
+    spark: SparkSession,
+    path: str,
+    schema: str,
+    key_cols: tuple[str, ...],
+    count_cols: tuple[str, ...],
+    exclude_batch: int = -1,
+) -> DataFrame:
+    """SUM-merge read of a keyed count store: one row per ``key_cols``
+    value with every ``count_cols`` column summed (as long) over all
+    batches except ``exclude_batch``. Empty ``key_cols`` gives the
+    one-row global total."""
+    raw = read_batch_store(spark, path, schema, exclude_batch)
+    return raw.groupBy(*key_cols).agg(
+        *[F.sum(c).cast("long").alias(c) for c in count_cols]
+    )
 
 
 def _read_batch_store(

@@ -14,11 +14,12 @@ else) bridges the boundary:
     pair counts         →  appended under ``pairs/batch=<id>``
     new state           →  last event per user  →  ``state/batch=<id>``
 
-Reads merge the state store by per-user (ts, event_id) argmax — a MAX
-merge, so re-delivered state rows are harmless — while pair counts are
-SUMs: like the Count-Min / quota stores, ``batch=<id>`` overwrite makes
-retries idempotent and the exclude-current-batch read contract
-(streaming/store.py) is load-bearing.
+Reads merge the state store (streaming/foldstate.py's FoldStateStore)
+by per-user (ts, event_id) argmax — a MAX merge, so re-delivered state
+rows are harmless — while pair counts are SUMs: like the Count-Min /
+quota stores, ``batch=<id>`` overwrite makes retries idempotent and the
+exclude-current-batch read contract (streaming/store.py) is
+load-bearing.
 
 Ordering contract: micro-batches must arrive in event-time order per
 user (the property checkpointed sources provide); the boundary join
@@ -44,9 +45,12 @@ from pyspark.sql.window import Window
 from cloudfront_kinesis_log_lambda_spark.operators.timeseries import (
     transition_pairs,
 )
+from cloudfront_kinesis_log_lambda_spark.streaming.foldstate import (
+    FoldStateStore,
+)
 from cloudfront_kinesis_log_lambda_spark.streaming.store import (
-    read_batch_store,
-    read_batch_store_before,
+    read_sum_merged,
+    write_batch,
 )
 
 _PAIR_SCHEMA = "from_type string, to_type string, n bigint"
@@ -68,7 +72,7 @@ class StreamingTransitions:
 
     def __init__(self, store_dir: str) -> None:
         self.pairs_dir = os.path.join(store_dir, "pairs")
-        self.state_dir = os.path.join(store_dir, "state")
+        self.store = FoldStateStore(store_dir, _STATE_SCHEMA, ("last_type",))
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -112,9 +116,7 @@ class StreamingTransitions:
             .groupBy("from_type", "to_type")
             .agg(F.count(F.lit(1)).cast("long").alias("n"))
         )
-        pairs.write.mode("overwrite").parquet(
-            os.path.join(self.pairs_dir, f"batch={batch_id}")
-        )
+        write_batch(pairs, self.pairs_dir, batch_id)
 
         lasts = ranked.filter(F.col("rn_desc") == 1).select(
             "user_id",
@@ -122,51 +124,28 @@ class StreamingTransitions:
             F.col("event_id").alias("last_id"),
             F.col("event_type").alias("last_type"),
         )
-        lasts.write.mode("overwrite").parquet(
-            os.path.join(self.state_dir, f"batch={batch_id}")
-        )
+        self.store.write(lasts, batch_id)
 
     def state(
         self, spark: SparkSession, before_batch: int | None = None
     ) -> DataFrame:
-        """Per-user latest event across the batch history: argmax by
-        (last_ts, last_id) via struct-MAX. The boundary join reads
-        AS-OF (``before_batch``): a retried batch must recompute
-        against exactly the pre-batch state — the merely
+        """Per-user latest event across the batch history
+        (FoldStateStore's argmax by (last_ts, last_id)). The boundary
+        join reads AS-OF ``before_batch``: a retried batch must
+        recompute against exactly the pre-batch state — the merely
         exclude-current read would see LATER batches' state on an
         out-of-order retry and rewrite different pair counts
         (non-idempotent overwrite; pinned by the retry test)."""
-        if before_batch is None:
-            raw = read_batch_store(spark, self.state_dir, _STATE_SCHEMA, -1)
-        else:
-            raw = read_batch_store_before(
-                spark, self.state_dir, _STATE_SCHEMA, before_batch
-            )
-        return (
-            raw.groupBy("user_id")
-            .agg(
-                F.max(
-                    F.struct("last_ts", "last_id", "last_type")
-                ).alias("s")
-            )
-            .select(
-                "user_id",
-                F.col("s.last_ts").alias("last_ts"),
-                F.col("s.last_id").alias("last_id"),
-                F.col("s.last_type").alias("last_type"),
-            )
-        )
+        return self.store.state(spark, before_batch)
 
     def transitions(
         self, spark: SparkSession, exclude_batch: int = -1
     ) -> DataFrame:
         """SUM-merged transition matrix with row-normalized
         probabilities — column-for-column the batch query's output."""
-        raw = read_batch_store(
-            spark, self.pairs_dir, _PAIR_SCHEMA, exclude_batch
-        )
-        counts = raw.groupBy("from_type", "to_type").agg(
-            F.sum("n").cast("long").alias("n")
+        counts = read_sum_merged(
+            spark, self.pairs_dir, _PAIR_SCHEMA, ("from_type", "to_type"),
+            ("n",), exclude_batch,
         )
         wf = Window.partitionBy("from_type")
         return counts.select(

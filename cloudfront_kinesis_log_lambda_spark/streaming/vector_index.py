@@ -40,6 +40,7 @@ from cloudfront_kinesis_log_lambda_spark.operators.similarity import (
 from cloudfront_kinesis_log_lambda_spark.streaming.store import (
     ensure_frozen_centroids,
     load_centroids,
+    write_batch,
 )
 
 
@@ -94,11 +95,11 @@ class StreamingVectorIndex:
             assigned.select(self.id_col, "cid", _norm(F.col(self.vec_col)).alias("nrm"))
             .join(q, self.id_col)
         )
-        (
-            entry.select(self.id_col, "cid", "scale", "codes", "nrm")
-            .write.mode("overwrite")
-            .partitionBy("cid")
-            .parquet(os.path.join(self.index_dir, f"batch={batch_id}"))
+        write_batch(
+            entry.select(self.id_col, "cid", "scale", "codes", "nrm"),
+            self.index_dir,
+            batch_id,
+            partition_by=("cid",),
         )
 
 

@@ -38,6 +38,7 @@ from cloudfront_kinesis_log_lambda_spark.operators.reshape import (
 )
 from cloudfront_kinesis_log_lambda_spark.streaming.store import (
     read_batch_store,
+    write_batch,
 )
 
 _SCHEMA = "doc_id long, n_chars long, sample_key double"
@@ -82,9 +83,7 @@ class StreamingWeightedSample:
             .orderBy(F.col("sample_key").desc(), F.col("doc_id").asc())
             .limit(self.k)
         )
-        top.write.mode("overwrite").parquet(
-            os.path.join(self.candidates_dir, f"batch={batch_id}")
-        )
+        write_batch(top, self.candidates_dir, batch_id)
 
     def sample(
         self, spark: SparkSession, exclude_batch: int = -1

@@ -109,3 +109,22 @@ def test_bench_headline_queries_exist_in_registry():
     q = set(entry.queries())
     missing = [n for n in bench.HEADLINE + bench.EXTENSION if n not in q]
     assert not missing, f"bench.py references unknown queries: {missing}"
+
+
+def test_batch_store_layout_has_one_owner():
+    """The ``batch=<id>`` directory layout is the retry-safety contract
+    of every foreachBatch twin: streaming/store.py's write_batch and
+    readers own it, and no other module may format the path by hand
+    (a drifted copy would silently break overwrite idempotence)."""
+    from pathlib import Path
+
+    import cloudfront_kinesis_log_lambda_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    owner = root / "streaming" / "store.py"
+    offenders = [
+        str(p.relative_to(root))
+        for p in sorted(root.rglob("*.py"))
+        if p != owner and "batch={" in p.read_text()
+    ]
+    assert not offenders, f"hand-formatted batch=<id> paths: {offenders}"

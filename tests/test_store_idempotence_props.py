@@ -3,7 +3,8 @@
 
 The per-store tests (test_streaming_*.py) each pin ONE retry shape.
 This file drives the shared primitives — read_batch_store /
-read_batch_store_before / fold_batch_store + ``batch=<id>`` overwrite —
+read_batch_store_before / fold_batch_store + the ``batch=<id>``
+overwrite of write_batch —
 through randomized schedules of newest-batch retries with maintenance
 folds interleaved, across the four merge-contract classes the stores
 implement:
@@ -39,16 +40,13 @@ from pyspark.sql import functions as F
 from cloudfront_kinesis_log_lambda_spark.streaming.store import (
     fold_batch_store,
     read_batch_store,
+    write_batch,
 )
 
 TOPK = 3
 
 # --- the four writer models -------------------------------------------------
 # Each: (schema, writer(spark, path, rows, bid), final(spark, path) -> rows)
-
-
-def _write(df, path: str, bid: int) -> None:
-    df.write.mode("overwrite").parquet(os.path.join(path, f"batch={bid}"))
 
 
 def _mk(spark, rows, schema):
@@ -62,7 +60,7 @@ MAX_SCHEMA = "key string, val long"
 
 def max_writer(spark, path, rows, bid):
     df = _mk(spark, rows, MAX_SCHEMA)
-    _write(df.groupBy("key").agg(F.max("val").alias("val")), path, bid)
+    write_batch(df.groupBy("key").agg(F.max("val").alias("val")), path, bid)
 
 
 def max_final(spark, path):
@@ -93,7 +91,7 @@ def sum_writer(spark, path, rows, bid):
         partial.join(prior, "key", "left")
         .select("key", "partial", F.coalesce("prior", F.lit(0)).alias("prior"))
     )
-    _write(out, path, bid)
+    write_batch(out, path, bid)
 
 
 def sum_final(spark, path):
@@ -112,7 +110,7 @@ def topk_writer(spark, path, rows, bid):
         .orderBy(F.col("val").desc(), F.col("key").asc())
         .limit(TOPK)
     )
-    _write(out, path, bid)
+    write_batch(out, path, bid)
 
 
 def topk_final(spark, path):
@@ -132,7 +130,7 @@ FACT_SCHEMA = "key string, val long"
 def fact_writer(spark, path, rows, bid):
     batch = _mk(spark, rows, FACT_SCHEMA).distinct()
     prior = read_batch_store(spark, path, FACT_SCHEMA, bid)
-    _write(batch.join(prior, ["key", "val"], "left_anti"), path, bid)
+    write_batch(batch.join(prior, ["key", "val"], "left_anti"), path, bid)
 
 
 def fact_final(spark, path):
@@ -472,7 +470,7 @@ def test_sum_writer_depends_on_exclude_current(spark):
         out = partial.join(prior, "key", "left").select(
             "key", "partial", F.coalesce("prior", F.lit(0)).alias("prior")
         )
-        _write(out, path, 1)
+        write_batch(out, path, 1)
         after = sorted(map(tuple, sum_final(spark, path)))
         assert after != before  # the broken read corrupts state
         # and the correct retry restores it
